@@ -21,9 +21,21 @@ from solana_etl_pipeline_spark.session import apply_runtime_confs
 _SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
+def _prepare(spark: SparkSession) -> SparkSession:
+    """Give a session the engine did not build its semantics and its
+    sizing rule: one shuffle partition per core the session runs on
+    (``session.build_session`` does the same for its own sessions)."""
+    apply_runtime_confs(spark)
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(spark.sparkContext.defaultParallelism),
+    )
+    return spark
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    apply_runtime_confs(spark)
+    _prepare(spark)
     return QUERIES["risk_scores_topk"].spark(spark, _SMOKE_SF_DIR)
 
 
@@ -32,7 +44,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def _wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            apply_runtime_confs(spark)
+            _prepare(spark)
             return fn(spark, sf_dir)
 
         return run

@@ -12,6 +12,14 @@ settings:
 - UTC session timezone: timestamps are stored/compared as UTC instants;
   PST rendering (reference ``clean_data.py:27-34``) is a display-edge
   concern handled by ``functions.timestamps``.
+
+The shuffle partition count follows the hardware and is set in one
+place, :func:`build_session`: its ``shuffle_partitions`` argument, else
+the session's core count (:func:`session_cores`). Nothing resets it
+afterwards — :data:`RUNTIME_CONFS` and :func:`apply_runtime_confs`
+carry semantics and optimizer posture only. A streaming checkpoint keeps
+the state-partition count it was first started with, so checkpoints
+created under an earlier count keep it until they are recreated.
 """
 
 from __future__ import annotations
@@ -25,6 +33,8 @@ from pyspark.sql import SparkSession
 
 # Runtime-settable SQL confs applied to *any* session the engine touches
 # (including a driver-owned session handed to `__spark_entry__.queries`).
+# Semantics and optimizer posture only: sizing (shuffle partitions) is
+# the session builder's, never overridden here.
 RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.ansi.enabled": "false",
     "spark.sql.session.timeZone": "UTC",
@@ -53,10 +63,6 @@ RUNTIME_CONFS: dict[str, str] = {
     # this back to true and force SHJ per-join via SHUFFLE_HASH hints
     # where measured.
     "spark.sql.join.preferSortMergeJoin": "false",
-    # Local/driver-session sizing: 32 shuffle partitions matches the
-    # local[32] core budget (AQE coalesces further). On a cluster,
-    # override to ~2-3x total executor cores at session build time.
-    "spark.sql.shuffle.partitions": "32",
 }
 
 
@@ -65,6 +71,7 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
 
     Safe and idempotent; used on sessions we did not build (driver
     contract) so correctness-critical semantics (ANSI off, UTC) hold.
+    Leaves ``spark.sql.shuffle.partitions`` as the session has it.
     """
     for key, value in RUNTIME_CONFS.items():
         try:
@@ -223,6 +230,14 @@ def gc_java_opts() -> str:
     return " ".join(opts)
 
 
+def session_cores() -> int:
+    """Core count of the engine's default local session:
+    ``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on
+    (what ``local[*]`` schedules on)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
 def build_session(
     app_name: str = "solana-etl-pipeline-spark",
     master: str | None = None,
@@ -233,9 +248,17 @@ def build_session(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``)
     for test/bench runs; on a real cluster, leave it unset and let
-    spark-submit own deployment. ``shuffle_partitions`` defaults to the
-    local core count for small scale factors — at 100 TB you would size
-    this to ~2-3x total executor cores (AQE coalesces the excess).
+    spark-submit own deployment.
+
+    ``shuffle_partitions`` defaults to :func:`session_cores`, and this
+    is the one place the engine sets it: one shuffle task (and one
+    state store of a stateful streaming operator) per core, since every
+    partition pays a fixed per-micro-batch open/commit cost whatever
+    its data. Pass it explicitly with an explicit ``master`` of another
+    size; at 100 TB you would size it to ~2-3x total executor cores
+    (AQE coalesces the excess). A streaming checkpoint keeps the
+    state-partition count of its first start, so a checkpoint created
+    under another count keeps that count until it is recreated.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -243,7 +266,7 @@ def build_session(
         .master(master or f"local[{cpus}]")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or (32 if cpus == "*" else int(cpus))),
+            str(shuffle_partitions or session_cores()),
         )
         # Local-mode niceties; harmless on a cluster.
         .config("spark.ui.enabled", "false")

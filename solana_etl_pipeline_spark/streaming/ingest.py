@@ -398,8 +398,9 @@ def run_available_now_to_parquet(
     output_dir: str,
     checkpoint_dir: str,
     timeout_sec: int = 300,
-) -> None:
-    """Drain to a parquet sink (append mode) with a checkpoint.
+):
+    """Drain to a parquet sink (append mode) with a checkpoint and
+    return the finished query (its ``lastProgress`` describes the drain).
 
     Unlike the memory sink, the file sink is fault-tolerant: restarting
     with the same checkpoint resumes from committed offsets (T5) — the
@@ -415,3 +416,4 @@ def run_available_now_to_parquet(
         .start()
     )
     _await_drain(query, timeout_sec)
+    return query

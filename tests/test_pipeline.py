@@ -334,6 +334,7 @@ def test_full_pipeline_soak(spark, tmp_path):
     silver = str(tmp_path / "silver")
     os.makedirs(bronze)
 
+    prior_partitions = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
         # stage A: landing text -> bronze parquet (raw preserved)
@@ -462,7 +463,7 @@ def test_full_pipeline_soak(spark, tmp_path):
     finally:
         for q in spark.streams.active:
             q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        spark.conf.set("spark.sql.shuffle.partitions", prior_partitions)
 
 
 def test_pipeline_exactly_once_event_time_deterministic(spark, tmp_path):
@@ -569,6 +570,7 @@ def test_pipeline_exactly_once_event_time_deterministic(spark, tmp_path):
         ]
         return spark.read.parquet(out), ops
 
+    prior_partitions = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
         fixed, ops = drain(deduplicated_within_watermark, "fix")
@@ -615,7 +617,7 @@ def test_pipeline_exactly_once_event_time_deterministic(spark, tmp_path):
     finally:
         for q in spark.streams.active:
             q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        spark.conf.set("spark.sql.shuffle.partitions", prior_partitions)
 
 
 def test_write_silver_dedup_against_existing(spark, tmp_path):

@@ -2,9 +2,25 @@
 JDK-17-era (the GCLocker itself is removed by JDK 22's region
 pinning) — an unrecognized -XX option aborts JVM startup, so the
 default driver/executor opts must gate it on the probed java major
-version (ADVICE r11)."""
+version (ADVICE r11). Also the partition-sizing rule: the count
+build_session sets is the one every later stage and state store uses."""
+
+import json
+import os
+
+from pyspark.sql.types import (
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from solana_etl_pipeline_spark import session
+from solana_etl_pipeline_spark.streaming.ingest import (
+    deduplicated_within_watermark,
+    landing_stream,
+    run_available_now_to_parquet,
+)
 
 
 def test_gclocker_flag_present_through_jdk21(monkeypatch):
@@ -76,3 +92,50 @@ def test_rocksdb_confs_snapshot_cadence():
         "minDeltasForSnapshot" in k
         for k in session.rocksdb_state_store_confs()
     )
+
+
+_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def test_session_cores_follows_env_then_affinity(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session.session_cores() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert session.session_cores() == len(os.sched_getaffinity(0))
+
+
+def test_runtime_confs_leave_partition_count_alone(spark):
+    # build_session is the one place the count is set; applying the
+    # runtime confs must not override the fixture's explicit 4.
+    assert _PARTITIONS not in session.RUNTIME_CONFS
+    assert spark.conf.get(_PARTITIONS) == "4"
+    session.apply_runtime_confs(spark)
+    assert spark.conf.get(_PARTITIONS) == "4"
+
+
+def test_dedup_drain_runs_one_state_store_per_partition(spark, tmp_path):
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    rows = [
+        {"mint": f"M{i % 5}", "signature": f"s{i % 5}",
+         "ts": f"2026-01-01T00:00:{i:02d}Z"}
+        for i in range(10)
+    ]
+    (landing / "part-0.json").write_text(
+        "\n".join(json.dumps(r) for r in rows) + "\n"
+    )
+    stream = landing_stream(
+        spark, str(landing),
+        StructType([
+            StructField("mint", StringType()),
+            StructField("signature", StringType()),
+            StructField("ts", TimestampType()),
+        ]),
+    )
+    query = run_available_now_to_parquet(
+        deduplicated_within_watermark(stream, ["mint", "signature"]),
+        str(tmp_path / "out"), str(tmp_path / "ckpt"),
+    )
+    [op] = query.lastProgress["stateOperators"]
+    assert op["numShufflePartitions"] == 4
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 5
